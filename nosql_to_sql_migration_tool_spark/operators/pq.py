@@ -172,7 +172,10 @@ def _pq_dists_arrow_fn(
     ``0.0 + v1`` equals ``v1`` exactly because squares are
     non-negative). Emits the RAW distances; rounding, argmin and the
     min-cid tie-break stay JVM-side so no Python rounding semantics
-    ever enter the result. Loud failures on ragged or null vectors."""
+    ever enter the result. Loud failures on ragged vectors, null
+    vectors, null elements, and elements that are not doubles (the
+    caller casts with ``as_double`` JVM-side, as the sibling operators
+    do, so no element type converts through NumPy)."""
     sub_len = len(books[0][0][1])
     m = len(books)
     centers = [
@@ -197,6 +200,10 @@ def _pq_dists_arrow_fn(
                 continue
             if vecs.null_count:
                 raise ValueError("pq_encode: null vector")
+            if not pa.types.is_float64(vecs.type.value_type):
+                raise TypeError("pq_encode: vector elements are not double")
+            if vecs.flatten().null_count:
+                raise ValueError("pq_encode: null vector element")
             widths = np.diff(vecs.offsets.to_numpy(zero_copy_only=False))
             if not (widths == m * sub_len).all():
                 raise ValueError("pq_encode: vector dim != m * sub_len")
@@ -242,7 +249,9 @@ def pq_encode(
     construction."""
     import pyspark.sql.types as T
 
-    dists = df.select(id_col, vec_col).mapInArrow(
+    dists = df.select(
+        id_col, as_double(F.col(vec_col)).alias(vec_col)
+    ).mapInArrow(
         _pq_dists_arrow_fn(vec_col, id_col, books),
         T.StructType(
             [

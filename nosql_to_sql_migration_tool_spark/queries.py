@@ -376,9 +376,11 @@ _VIEWS_REGISTERED: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 def _ensure_views(spark, sf_dir: str) -> None:
     """Register the sf_dir tables as temp views once per (session,
     sf_dir). The ten parquet-footer reads are a session-lifetime
-    first-touch cost, so bench times them as their own ``build:`` row
-    (VERDICT r7 — the cold driver run kept billing them to
-    catalog_listing and tripping the regression detector)."""
+    first-touch cost, paid once per session by whichever row reads a
+    table first (``load_table``'s schema memo), so bench times them as
+    their own ``build:`` row (VERDICT r7 — the cold driver run kept
+    billing them to catalog_listing and tripping the regression
+    detector)."""
     from nosql_to_sql_migration_tool_spark.sources.registry import (
         register_views,
     )
@@ -399,8 +401,9 @@ def q_catalog_listing(spark, sf_dir):
     """Catalog listing (listCollections, MasterWorkflow.ps1:186-221):
     register the scale-factor directory as views, list them back.
     Registration is memoized per (session, sf_dir): temp views persist
-    for the session, so repeat calls skip the ten parquet footer reads
-    (~1.1s of the query's steady-state cost before round 7)."""
+    for the session, so repeat calls skip re-registration. The ten
+    parquet footer reads behind it are paid once per session, shared
+    with every other row through ``load_table``'s schema memo."""
     from nosql_to_sql_migration_tool_spark.sources.registry import (
         TABLES,
         list_collections,
@@ -3977,16 +3980,24 @@ GROUP BY o_orderpriority
 def q_median_price_by_priority(spark, sf_dir):
     """EXACT interpolated percentiles per group (Spark `percentile`,
     not approx_percentile): both engines sort the group and interpolate
-    identically, so the doubles match bit-for-bit; 2-dp round guards
-    the midpoint division. Exact order statistics shuffle the full
-    column — approx sketches (operators/sketches.py) are the 100 TB
+    to the same raw double. They round it differently, though: Spark's
+    ``round(x, 2)`` rounds the exact binary value HALF_UP, DuckDB's
+    ``round(double, 2)`` computes ``round(x * 100) / 100``. On a
+    half-cent median (251826.35 / 251826.36 interpolates to
+    251826.35499999998) the first gives .35 and the second .36, so the
+    Spark side rounds DuckDB's way. Exact order statistics shuffle the
+    full column — approx sketches (operators/sketches.py) are the 100 TB
     default; this is the auditable exact path."""
+
+    def round_cents(x):
+        return F.round(x * 100) / 100
+
     o = load_table(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
-        F.round(F.percentile("o_totalprice", F.lit(0.5)), 2).alias(
+        round_cents(F.percentile("o_totalprice", F.lit(0.5))).alias(
             "median_price"
         ),
-        F.round(F.percentile("o_totalprice", F.lit(0.9)), 2).alias(
+        round_cents(F.percentile("o_totalprice", F.lit(0.9))).alias(
             "p90_price"
         ),
         F.count(F.lit(1)).alias("n_orders"),
@@ -6746,7 +6757,8 @@ def _pw_service_boot(spark, sf_dir):
     """One-time per-process SERVICE boots in one row (r13 fold of
     build:catalog_views + build:derby_boot — both are the VERDICT r7
     "cold run billed engine startup to a query row" class): ten
-    parquet-footer reads + the first listTables round trip (was 4.4x
+    parquet-footer reads (which also seed ``load_table``'s session
+    schema memo) + the first listTables round trip (was 4.4x
     on catalog_listing cold), and the embedded-Derby database boot +
     JDBC driver classload + first table creation (was ~1.2s on
     jdbc_roundtrip_agg). Each query row then measures its steady state

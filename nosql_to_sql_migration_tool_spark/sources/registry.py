@@ -6,13 +6,26 @@ endpoint (private/Connection_DB.ps1:17-218). Here the catalog is a parquet
 directory per scale factor; the same operators accept any DataFrame, so a
 MongoDB/JDBC connector source plugs in behind ``load_table`` without
 touching operator code.
+
+Schema memo: a plain ``spark.read.parquet`` launches one schema-inference
+job per call. ``load_table`` keeps each table's resolved schema per
+(session, path), the way a metastore would, and later reads pass it to
+``spark.read.schema(...)``, which launches no job. An entry is served
+only while the path's listing stamp is unchanged — (size, mtime_ns) of a
+file, or the sorted (relative path, size, mtime_ns) of every file under
+a directory — so a rewritten table is re-inferred, never read with an
+old schema. Entries live as long as their session; nothing persists
+across processes.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+
+from nosql_to_sql_migration_tool_spark.fingerprints import runtime_cache
 
 # The ten driver-generated tables (TESTDATA.md).
 TABLES = (
@@ -40,10 +53,59 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 # identity (epoch_ns(µs value) // 1000 == the µs value).
 EVENTS_TS_ORACLE = "make_timestamp(epoch_ns(ts) // 1000)"
 
+# session -> {(path, nanosAsLong): (listing stamp, schema)}. Weak-keyed on
+# the session (the queries._VIEWS_REGISTERED precedent), so a stopped
+# session's entries die with it. nanosAsLong is in the key because it
+# changes the inferred type of a TIMESTAMP(NANOS) column.
+_SCHEMA_MEMO: "weakref.WeakKeyDictionary" = runtime_cache(
+    weakref.WeakKeyDictionary()
+)
+
+
+def _listing_stamp(path: str):
+    """(size, mtime_ns) of a file; the sorted (relative path, size,
+    mtime_ns) of every file under a directory; None when the path is not
+    on the local filesystem (a URI or a glob)."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (st.st_size, st.st_mtime_ns)
+    if not os.path.isdir(path):
+        return None
+    out = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, served from the session's schema
+    memo while the path's listing stamp is unchanged."""
+    stamp = _listing_stamp(path)
+    if stamp is None:
+        return spark.read.parquet(path)
+    key = (path, spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
+    memo = _SCHEMA_MEMO.setdefault(spark, {})
+    hit = memo.get(key)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    # Overlap threads missing on the same key at once may both infer; they
+    # store identical schemas, so the race is harmless and needs no lock.
+    memo[key] = (stamp, df.schema)
+    return df
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table as a DataFrame. Lazy — Catalyst pushes filters and
-    column pruning into this scan."""
+    column pruning into this scan.
+
+    The first read of a table in a session infers its parquet schema (one
+    Spark job); later reads reuse it from the session's schema memo and
+    launch no job, until the file's size or mtime changes (see the module
+    docstring)."""
     if name == "events":
         from pyspark.sql import functions as F
 
@@ -56,7 +118,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         if spark.conf.get("spark.sql.session.timeZone") != "UTC":
             spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        df = _read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
         ts_type = dict(df.dtypes)["ts"]
         if ts_type == "bigint":
             # TIMESTAMP(NANOS) file read as a nanos long. Floor-division
@@ -71,7 +133,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # identical wall-clock) so downstream window/unix_* functions see
         # the same type the nanos path produced.
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def load_tables(

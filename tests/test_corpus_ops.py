@@ -296,6 +296,53 @@ def test_pq_codes_are_bounded_and_deterministic(spark):
     assert all(0 <= x < PQ_CODES for c in a.values() for x in c)
 
 
+def _pq_kernel_batch(books, vecs, value_type):
+    import pyarrow as pa
+
+    from nosql_to_sql_migration_tool_spark.operators.pq import _pq_dists_arrow_fn
+
+    batch = pa.record_batch(
+        [
+            pa.array(range(len(vecs)), type=pa.int64()),
+            pa.array(vecs, type=pa.list_(value_type)),
+        ],
+        names=["vec_id", "embedding"],
+    )
+    return list(_pq_dists_arrow_fn("embedding", "vec_id", books)([batch]))
+
+
+def test_pq_kernel_rejects_null_vector_elements():
+    """A null element inside a vector must fail loudly, not become a NaN
+    distance that the JVM argmin then sorts silently."""
+    import pyarrow as pa
+
+    books = [[(0, [0.0, 0.0]), (1, [1.0, 1.0])]]
+    assert len(_pq_kernel_batch(books, [[0.5, 0.5]], pa.float64())) == 1
+    with pytest.raises(ValueError, match="null vector element"):
+        _pq_kernel_batch(books, [[0.5, 0.5], [0.5, None]], pa.float64())
+
+
+def test_pq_encode_casts_vectors_to_double(spark):
+    """The kernel takes double elements only; ``pq_encode`` casts the
+    staged column JVM-side, so float vectors (the embeddings table's
+    type) encode exactly as their double cast does."""
+    import pyarrow as pa
+
+    from nosql_to_sql_migration_tool_spark.operators.pq import pq_encode
+    from nosql_to_sql_migration_tool_spark.operators.similarity import as_double
+
+    books = [[(0, [0.0, 0.0]), (1, [1.0, 1.0])]]
+    with pytest.raises(TypeError, match="not double"):
+        _pq_kernel_batch(books, [[0.5, 0.5]], pa.float32())
+
+    emb, books = _pq_setup(spark)
+    assert dict(emb.dtypes)["embedding"] == "array<float>"
+    as_dbl = emb.withColumn("embedding", as_double(F.col("embedding")))
+    codes = {r["vec_id"]: r["codes"] for r in pq_encode(emb, books).collect()}
+    want = {r["vec_id"]: r["codes"] for r in pq_encode(as_dbl, books).collect()}
+    assert codes == want
+
+
 def test_pq_query_ranks_itself_first(spark):
     from nosql_to_sql_migration_tool_spark.operators.pq import (
         pq_topk,

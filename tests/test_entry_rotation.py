@@ -41,9 +41,12 @@ def test_never_verified_queries_lead_then_oldest_verified():
     assert tail_rounds == sorted(tail_rounds)
 
 
-def test_failed_row_requeues_just_after_never_verified(tmp_path):
+def test_failed_row_requeues_just_after_never_verified(tmp_path, monkeypatch):
     """ADVICE r4: a query whose latest driver row FAILED must re-enter
-    the window band, not sink behind every green query."""
+    the window band, not sink behind every green query. The live pins'
+    changed-in rounds are cleared so the synthetic r02/r03 rows alone
+    decide the bands (a re-pin past round 2 would requeue ``some[0]``)."""
+    monkeypatch.setattr(entry, "_CHANGED_IN_ROUND", {})
     some = list(QUERIES)[:4]
     (tmp_path / "CORRECTNESS_r02.json").write_text(
         json.dumps(
@@ -313,7 +316,7 @@ def test_plan_hash_sees_module_constant_edits():
     )
 
 
-def test_plan_hash_ignores_runtime_cache_state():
+def test_plan_hash_ignores_runtime_cache_state(spark):
     """ADVICE r8 (medium): module-level memo caches are RUNTIME state, not
     plan constants. Populating one in a warm process (xdist ordering, -k
     subsets) must not change plan_hash — previously the digest of e.g.
@@ -324,9 +327,18 @@ def test_plan_hash_ignores_runtime_cache_state():
     rules as backstops for anything unregistered."""
     import nosql_to_sql_migration_tool_spark.fingerprints as fp
     import nosql_to_sql_migration_tool_spark.queries as q
+    from nosql_to_sql_migration_tool_spark.sources import registry
+    from tests.conftest import SF_DIR_SMOKE
 
     class Opaque:
         pass
+
+    # load_table is in every query's closure: its session schema memo
+    # must be populated, and still excluded, when the pins are checked.
+    before = {n: fp.plan_hash(fn) for n, fn in list(q.QUERIES.items())[:3]}
+    registry.load_table(spark, SF_DIR_SMOKE, "customer")
+    assert registry._SCHEMA_MEMO.get(spark)
+    assert before == {n: fp.plan_hash(q.QUERIES[n]) for n in before}
 
     touched = []
     try:

@@ -48,3 +48,33 @@ def test_stratified_sample_respects_bounds(spark):
     n_mach_kept = out.filter("c_mktsegment = 'MACHINERY'").count()
     assert n_building_kept == n_building_all  # 'ff' bound ~= keep all
     assert 0 < n_mach_kept < n_mach_all / 2   # '10' bound ~= 6%
+
+
+def test_median_price_rounds_half_cent_like_duckdb(spark, tmp_path):
+    """251826.35 / 251826.36 interpolate to 251826.35499999998 in both
+    engines. Spark's round(x, 2) takes that HALF_UP to .35, DuckDB's
+    round(double, 2) = round(x * 100) / 100 gives .36; the query must
+    round DuckDB's way."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "orders.parquet"
+    pq.write_table(
+        pa.table(
+            {
+                "o_orderkey": pa.array([1, 2], type=pa.int64()),
+                "o_totalprice": pa.array([251826.35, 251826.36]),
+                "o_orderpriority": ["1-URGENT", "1-URGENT"],
+            }
+        ),
+        path,
+    )
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW orders AS SELECT * FROM '{path}'")
+    name = "median_price_by_priority"
+    spark_df = QUERIES[name](spark, str(tmp_path))
+    assert spark_df.first()["median_price"] == 251826.36
+    problems = compare(spark_df, con.sql(ORACLES[name]))
+    con.close()
+    assert not problems, problems
